@@ -96,26 +96,35 @@ object AvroDirectDatumWriter {
   private def valueWriter(dt: DataType, schema0: Schema): VW = {
     if (schema0.getType == Type.UNION) return unionWriter(dt, schema0)
     (dt, schema0.getType) match {
+      // primitive getters read a null slot as 0/false: check first, so
+      // a null in a non-nullable field fails the write like the
+      // GenericRecord tier does instead of landing as a silent zero
       case (BooleanType, Type.BOOLEAN) =>
-        (r, i, out) => out.writeBoolean(r.getBoolean(i))
-      case (IntegerType, Type.INT) =>
-        (r, i, out) => out.writeInt(r.getInt(i))
-      case (DateType, Type.INT) => // both are days since epoch
-        (r, i, out) => out.writeInt(r.getInt(i))
+        (r, i, out) =>
+          if (r.isNullAt(i)) nullIn(schema0) else out.writeBoolean(r.getBoolean(i))
+      case (IntegerType | DateType, Type.INT) => // dates: days since epoch
+        (r, i, out) =>
+          if (r.isNullAt(i)) nullIn(schema0) else out.writeInt(r.getInt(i))
       case (LongType, Type.LONG) =>
-        (r, i, out) => out.writeLong(r.getLong(i))
+        (r, i, out) =>
+          if (r.isNullAt(i)) nullIn(schema0) else out.writeLong(r.getLong(i))
       case (TimestampType | TimestampNTZType, Type.LONG) =>
         schema0.getLogicalType match {
           case _: org.apache.avro.LogicalTypes.TimestampMillis |
                _: org.apache.avro.LogicalTypes.LocalTimestampMillis =>
-            (r, i, out) => out.writeLong(Math.floorDiv(r.getLong(i), 1000L))
+            (r, i, out) =>
+              if (r.isNullAt(i)) nullIn(schema0)
+              else out.writeLong(Math.floorDiv(r.getLong(i), 1000L))
           case _ => // (local-)timestamp-micros IS the internal form
-            (r, i, out) => out.writeLong(r.getLong(i))
+            (r, i, out) =>
+              if (r.isNullAt(i)) nullIn(schema0) else out.writeLong(r.getLong(i))
         }
       case (FloatType, Type.FLOAT) =>
-        (r, i, out) => out.writeFloat(r.getFloat(i))
+        (r, i, out) =>
+          if (r.isNullAt(i)) nullIn(schema0) else out.writeFloat(r.getFloat(i))
       case (DoubleType, Type.DOUBLE) =>
-        (r, i, out) => out.writeDouble(r.getDouble(i))
+        (r, i, out) =>
+          if (r.isNullAt(i)) nullIn(schema0) else out.writeDouble(r.getDouble(i))
       case (StringType, Type.STRING) =>
         // UTF8String already holds UTF-8 bytes: wrap, never transcode
         // through java.lang.String (the old path's toString + re-encode)
@@ -179,6 +188,9 @@ object AvroDirectDatumWriter {
         throw new IllegalArgumentException(s"unplannable: $other")
     }
   }
+
+  private def nullIn(schema: Schema): Nothing =
+    throw new NullPointerException(s"null value for non-nullable $schema")
 
   /** Union writer. `[null, T]`-style (one non-null branch): null check
     * + index + inner. Multi-branch: the Catalyst value is the tagged

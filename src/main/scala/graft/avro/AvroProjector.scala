@@ -7,35 +7,44 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.catalyst.plans.logical.Project
 
-import graft.sql.GraftSql
+import graft.sql.{FlattenPlanner, GraftSql, SelectParser, SelectQuery}
 
 /** Compiled per-record projection — the engine on the reference's own
   * per-message turf (a Kafka Connect SMT transforms one record at a time,
-  * reference AvroSql.scala:44).
+  * reference AvroSql.scala:44), and the kernel behind `record.sql(...)`
+  * (see [[AvroSql]], which caches one projector per (session, writer
+  * schema, query)).
   *
-  * `record.sql(...)` runs a one-row Spark job per call, which is correct
-  * but pays scheduler latency per record. This projector PLANS ONCE:
-  * the query is resolved by Catalyst against the record schema, the
-  * resolved project list is compiled to an `UnsafeProjection` (Janino
-  * codegen — the same Tungsten kernel a DataFrame execution would run),
-  * and each `apply` is then row-in/row-out with no job, no scheduler, no
-  * RDD. The reference re-derives schema + projection for EVERY record
-  * (AvroSql.scala:74-82); here per-record work is codec + one generated
-  * function call, so single-thread throughput beats the reference's
-  * interpretive record walk while staying semantically identical to the
-  * DataFrame path (same planner, same expressions).
+  * The projector PLANS ONCE: the query is resolved by Catalyst against
+  * the record schema, the resolved project list is compiled to an
+  * `UnsafeProjection` (Janino codegen — the same Tungsten kernel a
+  * DataFrame execution would run), and each `apply` is then
+  * row-in/row-out with no job, no scheduler, no RDD. The reference
+  * re-derives schema + projection for EVERY record (AvroSql.scala:74-82);
+  * here per-record work is codec + one generated function call, while
+  * staying semantically identical to the DataFrame path (same planner,
+  * same expressions).
+  *
+  * Planning errors (parse failure, unknown field, illegal flatten) are
+  * `IllegalArgumentException`s. The projector keeps no reference to the
+  * session it was planned in.
   */
-final class AvroProjector(spark: SparkSession, inSchema: Schema, query: String) {
+final class AvroProjector(spark: SparkSession, inSchema: Schema, query: SelectQuery) {
+
+  def this(spark: SparkSession, inSchema: Schema, query: String) =
+    this(spark, inSchema, SelectParser.parse(query))
 
   private val struct = AvroSchemaConverter.toStruct(inSchema)
 
   // Resolve the planned Columns with Catalyst against an empty relation —
   // analysis only, nothing is executed.
   private val analyzed = {
-    import GraftSql.implicits._
     val empty = spark.createDataFrame(
       java.util.Collections.emptyList[Row](), struct)
-    empty.sql(query).queryExecution.analyzed
+    (GraftSql.plan(query, struct) match {
+      case FlattenPlanner.Identity => empty
+      case FlattenPlanner.Columns(cols) => empty.select(cols: _*)
+    }).queryExecution.analyzed
   }
 
   /** Output schema as Spark sees it. */
@@ -70,8 +79,9 @@ final class AvroProjector(spark: SparkSession, inSchema: Schema, query: String) 
     AvroInternalCodec.decoderFor(inSchema, struct)
   private val encode = AvroInternalCodec.encoderFor(outputStruct, outputAvroSchema)
 
-  /** Project one record. Thread-confined (the compiled projection reuses
-    * its output buffer); create one projector per thread for parallel use.
+  /** Project one record into a fresh output record. Thread-confined (the
+    * compiled projection reuses its output buffer); create one projector
+    * per thread for parallel use.
     */
   def apply(record: IndexedRecord): GenericRecord = {
     if (record == null) return null

@@ -1,10 +1,12 @@
 package graft.avro
 
+import java.lang.ref.WeakReference
+
 import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericRecord, IndexedRecord}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sql.{Field, GraftSql, SelectParser, SelectQuery}
+import graft.sql.{Field, SelectParser, SelectQuery}
 
 import scala.jdk.CollectionConverters._
 
@@ -17,17 +19,25 @@ final case class AvroPrimitive(value: Any, schema: Schema)
 /** The reference's public surface, re-expressed on the Spark engine
   * (reference: `record.sql("SELECT …")`, AvroSql.scala:43-65, README.md:8-13).
   *
-  * A single record round-trips through a 1-row DataFrame: Avro schema →
-  * `StructType` → GraftSql projection plan → projected Row → derived output
-  * Avro schema (names/docs/props restored from `avro.*` metadata, O15) →
-  * `GenericRecord`. Contract parity:
+  * `record.sql` plans once per (session, writer schema, query): the first
+  * call compiles an [[AvroProjector]] (parse → GraftSql plan → Catalyst
+  * analysis → codegen'd `UnsafeProjection` → derived output Avro schema,
+  * names/docs/props restored from `avro.*` metadata, O15), and every
+  * later record with the same schema and query runs through that kernel
+  * with no DataFrame, no planning and no job. Compiled projectors live in
+  * a per-thread LRU of at most [[PlanCacheBound]] entries, keyed by the
+  * record's own `Schema` (identity, then `equals`), so two writer schemas
+  * that share a record name never share a plan. Contract parity:
   *  - `null` input → `null` output (AvroSql.scala:68)
+  *  - only RECORD containers; anything else is an `IllegalArgumentException`
   *  - primitive containers accept only `SELECT *` (AvroSql.scala:106-131)
-  *  - all planning errors are `IllegalArgumentException`s
+  *  - all planning errors are `IllegalArgumentException`s, raised on every
+  *    call (failures are never cached)
+  *  - every call returns a fresh output record
   *
-  * The per-record API exists for parity and tests; the intended bulk path
-  * is [[AvroBridge.toDF]] → `df.sql(query)` → [[AvroBridge.fromDF]], where
-  * one plan serves every record and Catalyst/Tungsten execute it.
+  * For many records under one schema, the bulk path
+  * [[AvroBridge.toDF]] → `df.sql(query)` → [[AvroBridge.fromDF]] lets
+  * Catalyst/Tungsten execute the same plan over a whole DataFrame.
   */
 object AvroSql {
 
@@ -47,32 +57,20 @@ object AvroSql {
   }
 
   def sql(record: IndexedRecord, query: String)(implicit spark: SparkSession): GenericRecord =
-    run(record, df => project(df, query))
+    run(record, query)
 
   /** EP3: pre-parsed select-list fields + explicit mode. */
   def sql(record: IndexedRecord, fields: Seq[Field], flatten: Boolean)(
       implicit spark: SparkSession): GenericRecord =
-    run(record, { df =>
-      val q = SelectQuery(fields, None, withStructure = !flatten)
-      GraftSql.plan(q, df.schema) match {
-        case graft.sql.FlattenPlanner.Identity => df
-        case graft.sql.FlattenPlanner.Columns(cols) => df.select(cols: _*)
-      }
-    })
+    run(record, SelectQuery(fields, None, withStructure = !flatten))
 
-  private def run(record: IndexedRecord, proj: DataFrame => DataFrame)(
+  private def run(record: IndexedRecord, query: AnyRef)(
       implicit spark: SparkSession): GenericRecord = {
     if (record == null) return null
     val inSchema = record.getSchema
     require(inSchema.getType == Schema.Type.RECORD,
       s"only RECORD containers are supported, got ${inSchema.getType}")
-    val struct = AvroSchemaConverter.toStruct(inSchema)
-    val df = spark.createDataFrame(
-      java.util.Arrays.asList(AvroRowCodec.toRow(record, struct)), struct)
-    val out = proj(df)
-    val (name, ns, doc) = AvroSchemaConverter.recordInfo(inSchema)
-    val outAvro = AvroSchemaConverter.toAvro(out.schema, name, ns, doc)
-    AvroRowCodec.fromRow(out.head(), out.schema, outAvro)
+    projector(spark, inSchema, query)(record)
   }
 
   /** Primitive container: only `SELECT *` is legal and is the identity
@@ -89,23 +87,73 @@ object AvroSql {
     p
   }
 
-  private def project(df: DataFrame, query: String): DataFrame = {
-    import GraftSql.implicits._
-    df.sql(query)
-  }
-
   /** Derive the output Avro schema a query would produce for an input
     * schema — the reference's schema phase alone (AvroSchemaSql.scala) —
-    * by planning against an empty relation (no data is touched).
+    * from the same cached plan `record.sql` uses (no data is touched).
     */
-  def outputSchema(spark: SparkSession, inSchema: Schema, query: String): Schema = {
-    val struct = AvroSchemaConverter.toStruct(inSchema)
-    val empty = spark.createDataFrame(
-      java.util.Collections.emptyList[Row](), struct)
-    val out = project(empty, query)
-    val (name, ns, doc) = AvroSchemaConverter.recordInfo(inSchema)
-    AvroSchemaConverter.toAvro(out.schema, name, ns, doc)
+  def outputSchema(spark: SparkSession, inSchema: Schema, query: String): Schema =
+    projector(spark, inSchema, query).outputAvroSchema
+
+  // --- plan cache ---------------------------------------------------------
+
+  /** Most compiled projectors one thread keeps; the least recently used
+    * plan is evicted beyond it.
+    */
+  val PlanCacheBound = 64
+
+  /** (session, writer schema, query) — `query` is the query string or,
+    * for EP3, the pre-parsed [[SelectQuery]]. The session is held weakly
+    * (a stopped, dropped session stays collectable); a key whose session
+    * was collected matches nothing and ages out of the LRU.
+    */
+  private final class PlanKey(val session: WeakReference[SparkSession],
+      val schema: Schema, val query: AnyRef) {
+    override val hashCode: Int =
+      (System.identityHashCode(session.get) * 31 + schema.hashCode) * 31 +
+        query.hashCode
+    override def equals(o: Any): Boolean = o match {
+      case k: PlanKey =>
+        val s = session.get
+        s != null && (s eq k.session.get) &&
+          ((schema eq k.schema) || schema == k.schema) && query == k.query
+      case _ => false
+    }
   }
+
+  /** One thread's plans: an access-ordered LRU, plus the weak reference
+    * its keys share for the session the thread last used.
+    */
+  private final class ThreadPlans
+      extends java.util.LinkedHashMap[PlanKey, AvroProjector](16, 0.75f, true) {
+    var session = new WeakReference[SparkSession](null)
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[PlanKey, AvroProjector]): Boolean =
+      size > PlanCacheBound
+  }
+
+  // projectors are thread-confined, so each thread compiles its own
+  private val plans = ThreadLocal.withInitial[ThreadPlans](() => new ThreadPlans)
+
+  /** The calling thread's projector for (session, schema, query),
+    * compiled on a miss. A failed build throws and caches nothing.
+    */
+  private def projector(spark: SparkSession, schema: Schema, query: AnyRef): AvroProjector = {
+    val m = plans.get
+    if (m.session.get ne spark) m.session = new WeakReference(spark)
+    val key = new PlanKey(m.session, schema, query)
+    var p = m.get(key)
+    if (p == null) {
+      p = query match {
+        case q: String => new AvroProjector(spark, schema, q)
+        case q: SelectQuery => new AvroProjector(spark, schema, q)
+      }
+      m.put(key, p)
+    }
+    p
+  }
+
+  /** Number of plans the calling thread holds (tests). */
+  private[avro] def cachedPlans: Int = plans.get.size
 }
 
 /** Bulk Avro ⇄ DataFrame bridge — the Spark-first path: plan once, let

@@ -7447,7 +7447,8 @@ class AvroWriteBuilder(path: String, schema: StructType,
       // float/double excluded: NaN defeats pairwise order verification
       // (Spark sorts NaN last; cmp answers "undecidable")
       case StringType | IntegerType | LongType | ShortType | ByteType |
-           BooleanType | DateType | TimestampType | _: DecimalType => ()
+           BooleanType | DateType | TimestampType | TimestampNTZType |
+           _: DecimalType => ()
       case other => throw new IllegalArgumentException(
         s"sortedBy does not support ${other.simpleString} (column '$c')")
     }
@@ -8194,14 +8195,16 @@ private[sources] object AvroWriters {
   /** Total-order compare on INTERNAL values, same order as
     * [[AvroFilterEval.cmp]] on the external forms (strings are
     * UTF8String binary order == UTF-8 byte order on both sides).
-    * None = type has no comparator here (same set the old external
-    * path supported).
+    * None = type has no comparator here (the old external path's set,
+    * plus TIMESTAMP_NTZ, whose internal form is epoch micros like
+    * TIMESTAMP's).
     */
   private[sources] def internalCmp(dt: DataType): Option[(Any, Any) => Int] =
     dt match {
       case StringType => Some((a, b) =>
         a.asInstanceOf[UTF8String].compareTo(b.asInstanceOf[UTF8String]))
-      case LongType | TimestampType => Some((a, b) => java.lang.Long.compare(
+      case LongType | TimestampType | TimestampNTZType =>
+        Some((a, b) => java.lang.Long.compare(
         a.asInstanceOf[Long], b.asInstanceOf[Long]))
       case IntegerType | DateType => Some((a, b) => Integer.compare(
         a.asInstanceOf[Int], b.asInstanceOf[Int]))
@@ -8305,9 +8308,9 @@ private[sources] object AvroWriters {
 
     // (dotted name, field-index path, intermediate-struct sizes,
     // recorded type, INTERNAL-value comparator). Runs on InternalRow
-    // since r21 — same leaf eligibility as the old external path
-    // (internalCmp covers exactly the old cmpFor set; strings compare
-    // UTF8String-binary == the old code-point order).
+    // since r21 — leaf eligibility is internalCmp's set (the old
+    // cmpFor set plus TIMESTAMP_NTZ; strings compare UTF8String-binary
+    // == the old code-point order).
     private val leaves: Array[(String, Array[Int], Array[Int], DataType,
         (Any, Any) => Int)] = {
       val out = Array.newBuilder[(String, Array[Int], Array[Int], DataType,
@@ -8975,7 +8978,8 @@ private[sources] object AvroWriters {
       // keep col-zones/blooms/rows/NDV coverage (metadata COUNT, zone
       // and bloom pruning) instead of silently degrading to scan-only
       val verifier: Option[OrderVerifier] =
-        if (sortColsList.nonEmpty) Some(new OrderVerifier(sortColsList))
+        if (sortColsList.nonEmpty)
+          Some(new OrderVerifier(sortColsList, sortCmps))
         else None
       val colStats: ColumnStats = new ColumnStats(schema)
       val bloomStats: BloomBuilder =

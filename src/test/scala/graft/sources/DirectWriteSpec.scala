@@ -190,4 +190,36 @@ class DirectWriteSpec extends AnyFunSuite with SparkSpec with Matchers {
     assertFilesIdentical(a, b)
     assertSidecarsMatch(a, b)
   }
+
+  test("a null in a non-nullable primitive column fails the write") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    import org.apache.spark.sql.types._
+    // DataFrame writes declare every column nullable, so drive the datum
+    // writer directly with a non-nullable schema, in both tiers: the
+    // direct tier must fail loudly like the GenericRecord tier, never
+    // write a silent 0/false
+    val cols = Seq[(DataType, Any)](LongType -> 1L, BooleanType -> true,
+      IntegerType -> 1, DateType -> 1, TimestampType -> 1L,
+      TimestampNTZType -> 1L, FloatType -> 1f, DoubleType -> 1d)
+    for ((dt, ok) <- cols; direct <- Seq(true, false)) {
+      val struct = StructType(Seq(StructField("c", dt, nullable = false),
+        StructField("s", StringType, nullable = true)))
+      val avro = graft.avro.AvroSchemaConverter.toAvro(struct, "r", None, None)
+      System.setProperty("graft.avro.directWrite", direct.toString)
+      val w =
+        try new org.apache.avro.file.DataFileWriter[InternalRow](
+          graft.avro.AvroDirectDatumWriter(struct, avro))
+        finally System.clearProperty("graft.avro.directWrite")
+      w.create(avro, new java.io.ByteArrayOutputStream)
+      try {
+        w.append(new GenericInternalRow(Array[Any](ok, null)))
+        withClue(s"$dt (direct=$direct): ") {
+          val ex = intercept[Exception](
+            w.append(new GenericInternalRow(Array[Any](null, null))))
+          ex.getCause shouldBe a[NullPointerException]
+        }
+      } finally w.close()
+    }
+  }
 }

@@ -176,4 +176,53 @@ class SortedMultiSpec extends AnyFunSuite with SparkSpec with Matchers {
     AvroFileSource.sortedColumnsOf(new File(dir)) shouldBe Nil
     new File(dir, "_graft_zones") shouldNot exist
   }
+
+  // the flat (unpartitioned) writer verifies string, decimal and NTZ keys
+  // with the same planned comparators as the partitioned writer: an
+  // unsorted file under such a claim fails the write instead of
+  // publishing a sort marker, zones and block-index bounds it never had
+  private def unsortedFlatWriteFails(df: org.apache.spark.sql.DataFrame,
+      sortedBy: String): Unit = {
+    val dir = tmp()
+    val ex = intercept[Exception] {
+      df.coalesce(1).write.format("graft-avro").option("sortedBy", sortedBy)
+        .mode("overwrite").save(dir)
+    }
+    ex.getMessage should include("violated")
+    AvroFileSource.sortedColumnsOf(new File(dir)) shouldBe Nil
+  }
+
+  test("the flat writer rejects an unsorted STRING sortedBy key") {
+    import spark.implicits._
+    unsortedFlatWriteFails(Seq("apple", "cherry", "banana").toDF("s"), "s")
+    unsortedFlatWriteFails(
+      Seq((1L, "b"), (1L, "a")).toDF("g", "s"), "g,s")
+  }
+
+  test("the flat writer rejects an unsorted DECIMAL sortedBy key") {
+    import spark.implicits._
+    unsortedFlatWriteFails(
+      Seq("1.25", "3.50", "2.75").toDF("d")
+        .select(F.col("d").cast("decimal(10,2)").as("d")), "d")
+  }
+
+  test("the flat writer rejects an unsorted TIMESTAMP_NTZ sortedBy key") {
+    import spark.implicits._
+    unsortedFlatWriteFails(
+      Seq("2024-01-01 00:00:00", "2024-03-01 00:00:00", "2024-02-01 00:00:00")
+        .toDF("t").select(F.col("t").cast("timestamp_ntz").as("t")), "t")
+  }
+
+  test("a sorted TIMESTAMP_NTZ key keeps its claim on the flat writer") {
+    import spark.implicits._
+    val dir = tmp()
+    Seq("2024-01-01 00:00:00", "2024-02-01 00:00:00", "2024-03-01 00:00:00")
+      .toDF("t").select(F.col("t").cast("timestamp_ntz").as("t"))
+      .coalesce(1).write.format("graft-avro").option("sortedBy", "t")
+      .mode("overwrite").save(dir)
+    AvroFileSource.sortedColumnsOf(new File(dir)) shouldBe Seq("t")
+    spark.read.format("graft-avro").load(dir)
+      .where(F.col("t") >= F.lit("2024-02-01 00:00:00").cast("timestamp_ntz"))
+      .count() shouldBe 2L
+  }
 }
