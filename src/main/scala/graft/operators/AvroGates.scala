@@ -1522,8 +1522,8 @@ object AvroGates extends Catalog {
       val keyVals = keys.select("rid") // bounded: exactly 4 values
         .collect().map(_.getLong(0)).toSeq
       val nChunks = (t.count() + 4095L) / 4096L
-      val kept = t.filter(F.col("rid").isin(keyVals: _*))
-        .queryExecution.toRdd.getNumPartitions.toLong
+      val kept = graft.sources.AvroFileSource.plannedSplits(
+        t.filter(F.col("rid").isin(keyVals: _*))).length.toLong
       // at 2-3 chunks (sf0.001) a single deterministic bloom FP in the
       // non-home chunk would fail a strict kept < nChunks; the pruning
       // contract is load-bearing only at real chunk counts (ADVICE r18)
@@ -1571,7 +1571,8 @@ object AvroGates extends Catalog {
         .map(b => f"${b & 0xff}%02x").mkString.take(10)
       val nChunks = (t.count() + 4095L) / 4096L
       val filtered = t.filter(F.col("txt").contains(needle))
-      val kept = filtered.queryExecution.toRdd.getNumPartitions.toLong
+      val kept = graft.sources.AvroFileSource.plannedSplits(filtered)
+        .length.toLong
       require(kept >= 1L &&
         (if (nChunks >= 4L) kept < nChunks else kept <= nChunks),
         s"q_avro_block_trigram: trigram chunk cells did not prune " +
@@ -1617,7 +1618,7 @@ object AvroGates extends Catalog {
         .write.format("graft-avro").option("transformBy", "ts:day")
         .mode("overwrite").save(tmp) // v3
       def parts(df: org.apache.spark.sql.DataFrame): Long =
-        df.queryExecution.toRdd.getNumPartitions.toLong
+        graft.sources.AvroFileSource.plannedSplits(df).length.toLong
       val tv2 = s.read.format("graft-avro").option("versionAsOf", 2)
         .load(tmp)
       val keptA = parts(tv2.filter(F.col("ts") >= d08 && F.col("ts") < d22))

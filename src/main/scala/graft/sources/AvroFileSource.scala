@@ -36,11 +36,13 @@ import graft.avro.{AvroDirectDatumWriter, AvroInternalCodec, AvroSchemaConverter
   * }}}
   *
   * Scale design:
-  * - one [[InputPartition]] per container file, and SYNC-MARKER SPLITS
-  *   within files larger than `maxSplitBytes` (default 128 MB): Avro
-  *   block boundaries are discoverable from any byte offset via the
-  *   16-byte sync marker, so a huge file fans out as block-aligned byte
-  *   ranges instead of pinning one task;
+  * - one split per container file, and SYNC-MARKER SPLITS within files
+  *   larger than `maxSplitBytes` (default 128 MB): Avro block
+  *   boundaries are discoverable from any byte offset via the 16-byte
+  *   sync marker, so a huge file fans out as block-aligned byte ranges
+  *   instead of pinning one task; plain batch scans then pack small
+  *   splits into one [[InputPartition]] per core with Spark's
+  *   FilePartition sizing rule;
   * - COLUMN PRUNING pushes into the Avro decoder itself via
   *   [[SupportsPushDownRequiredColumns]]: the reader passes a pruned
   *   READER schema, and Avro's writer/reader schema resolution skips the
@@ -190,6 +192,19 @@ object AvroFileSource {
     * read with `.option("maxSplitBytes", n)`.
     */
   val DefaultSplitBytes: Long = 128L * 1024 * 1024
+
+  /** The input partitions of `df`'s v2 scans with packed partitions
+    * flattened into their splits: one entry per file range a scan
+    * reads (or per metadata-answered partition), however many tasks
+    * the ranges were packed into. Counting these counts the files or
+    * block-index chunks a scan plans.
+    */
+  def plannedSplits(df: org.apache.spark.sql.DataFrame): Seq[InputPartition] = {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) { case b: BatchScanExec => b }
+      .flatMap(b => AvroPackedPartition.flatten(b.inputPartitions))
+  }
 
   /** Metadata-column names (see [[AvroTable.metadataColumns]]). */
   val MetaFile = "_graft_file"
@@ -2381,9 +2396,14 @@ object AvroFileSource {
       case BooleanType => raw.toBoolean
       case DateType => java.sql.Date.valueOf(raw)
       case TimestampType => java.sql.Timestamp.valueOf(raw)
+      // the external LocalDateTime's ISO form, as zone and block-index
+      // bounds are written
+      case TimestampNTZType => java.time.LocalDateTime.parse(raw)
       case _ => return None
     })
-    catch { case _: IllegalArgumentException => None }
+    catch {
+      case _: IllegalArgumentException | _: java.time.DateTimeException => None
+    }
   }
 
   /** Job-commit fold of the four pruning/stat manifests (all-column
@@ -3978,26 +3998,35 @@ class AvroScanBuilder(path: String, full: StructType,
       override def readSchema(): StructType = required
 
       /** Report the verified sorted layout (see `sortedBy` write
-        * option): every scan partition is a single file or a
-        * sync-aligned range of one — both inherit the file's order — so
-        * downstream per-partition sorts on the marker column are
-        * eliminated. Withheld under `preservePartitioning` (SPJ may
-        * chain several files into one task, which breaks the order).
+        * option), so downstream per-partition sorts on the marker
+        * columns are eliminated. Invariant: every scan partition reads
+        * its rows in that order. A partition is one sync-aligned range
+        * of a file, consecutive ranges of one file, or several files
+        * chained by [[packed]] only when each file's zone range on the
+        * leading sort column lies strictly above the previous file's
+        * and holds no null there (sorted files store nulls first).
+        * Withheld under `preservePartitioning` (SPJ may chain several
+        * same-key files into one task in any order).
         */
-      override def outputOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
-        if (preserveGrouping) return Array.empty
-        // the sort marker claims the CURRENT directory contents; a
-        // snapshot's archived files were never verified under it
-        if (travelVersion.nonEmpty || incRange.nonEmpty || branch.nonEmpty) return Array.empty
-        // a lexicographic claim holds for every PREFIX of its columns,
-        // so report the longest prefix this scan still projects (a
-        // projected-out head column invalidates the tail's order)
-        AvroFileSource.sortedColumnsOf(new File(path))
-          .takeWhile(required.fieldNames.contains)
+      override def outputOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] =
+        reportedOrder
           .map(c => Expressions.sort(Expressions.column(c),
             org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
           .toArray
-      }
+
+      /** The sort columns [[outputOrdering]] reports; [[packed]] chains
+        * files under the same claim. The sort marker claims the CURRENT
+        * directory contents, so a snapshot's archived files (travel,
+        * incremental, branch reads) report none. A lexicographic claim
+        * holds for every PREFIX of its columns, so this is the longest
+        * prefix the scan still projects (a projected-out head column
+        * invalidates the tail's order).
+        */
+      private lazy val reportedOrder: Seq[String] =
+        if (preserveGrouping || travelVersion.nonEmpty || incRange.nonEmpty ||
+          branch.nonEmpty) Nil
+        else AvroFileSource.sortedColumnsOf(new File(path))
+          .takeWhile(required.fieldNames.contains)
 
       // ---- runtime partition pruning (Spark's DPP analogue for DSv2):
       // declare the directory-layout columns as filterable; at execution
@@ -4827,7 +4856,7 @@ class AvroScanBuilder(path: String, full: StructType,
         }
 
       /** The file's surviving chunk ranges under the pushed conjunction
-        * — emitted as its input partitions instead of blind byte splits
+        * — emitted as its splits instead of blind byte splits
         * (block-level skipping INSIDE a sorted file) — or None = serve
         * normally (no index, stale tiling, or nothing pruned anyway).
         */
@@ -5052,14 +5081,17 @@ class AvroScanBuilder(path: String, full: StructType,
         }
       }
 
+      /** A file's splits: the whole file, or sync-aligned byte ranges
+        * of at most `maxSplitBytes` when it is larger — a single huge
+        * file must not pin a single task at scale. A split is the unit
+        * of reading; plain batch scans then pack several splits into
+        * one task ([[packed]]), every other shape plans one partition
+        * per split. Positional deletes and `_graft_pos` split fine
+        * since r16: each range derives its starting ordinal from a
+        * block-header prefix walk (recordsBefore), so absolute
+        * ordinals stay countable without reading from the file start.
+        */
       private def split(f: File): Seq[(String, Long, Long)] = {
-        // one task per container file, except files larger than the
-        // split size, which fan out as sync-aligned byte ranges — a
-        // single huge file must not pin a single task at scale.
-        // Positional deletes and `_graft_pos` split fine since r16:
-        // each range derives its starting ordinal from a block-header
-        // prefix walk (recordsBefore), so absolute ordinals stay
-        // countable without reading from the file start.
         val len = f.length()
         if (len <= maxSplitBytes)
           Seq((f.getAbsolutePath, 0L, Long.MaxValue))
@@ -5067,6 +5099,84 @@ class AvroScanBuilder(path: String, full: StructType,
           (f.getAbsolutePath, off, math.min(off + maxSplitBytes, len))
         }
       }
+
+      /** Pack the kept files' splits, in listing order, into input
+        * partitions with Spark's own FilePartition rule: a pack closes
+        * once the next split would push it past
+        * `target = min(maxSplitBytes, max(openCost, (Σ split bytes +
+        * n·openCost) / minPartitionNum))`, and each split weighs its
+        * bytes plus `spark.sql.files.openCostInBytes`.
+        * `spark.sql.files.minPartitionNum` defaults to the leaf-node
+        * default parallelism, so a table of small files plans about
+        * one task per core instead of one per file. Listing order is
+        * kept (Spark sorts by size first) so the rows come back in the
+        * same order as one partition per split would give. Under a
+        * reported sort order a pack also closes before a file that may
+        * not follow the previous one in key order ([[mayFollow]]).
+        * Single-split packs stay plain [[AvroInputPartition]]s.
+        */
+      private def packed(files: Seq[(File, Seq[(Long, Long)])])
+          : Seq[InputPartition] = {
+        val conf = org.apache.spark.sql.internal.SQLConf.get
+        val openCost = conf.filesOpenCostInBytes
+        val minParts = conf.filesMinPartitionNum.getOrElse(
+          conf.getConf(org.apache.spark.sql.internal.SQLConf
+            .LEAF_NODE_DEFAULT_PARALLELISM).getOrElse(
+            org.apache.spark.sql.SparkSession.getActiveSession
+              .map(_.sparkContext.defaultParallelism).getOrElse(1)))
+        val splits = files.flatMap { case (f, ranges) =>
+          val len = f.length()
+          ranges.map { case (s, e) =>
+            (f, AvroInputPartition(f.getAbsolutePath, s, e),
+              math.max(0L, math.min(e, len) - s))
+          }
+        }
+        val target = math.min(maxSplitBytes, math.max(openCost,
+          splits.map(_._3 + openCost).sum / math.max(1, minParts)))
+        val out = Seq.newBuilder[InputPartition]
+        val cur = scala.collection.mutable.ArrayBuffer[AvroInputPartition]()
+        var size = 0L
+        var last: File = null
+        def close(): Unit = {
+          if (cur.length == 1) out += cur.head
+          else if (cur.length > 1) out += AvroPackedPartition(cur.toList)
+          cur.clear(); size = 0L
+        }
+        splits.foreach { case (f, split, bytes) =>
+          if (cur.nonEmpty && (size + bytes > target ||
+            (f != last && !mayFollow(last, f)))) close()
+          cur += split
+          size += bytes + openCost
+          last = f
+        }
+        close()
+        out.result()
+      }
+
+      /** May file `b` be read right after file `a` in one partition?
+        * Always, unless the scan reports an order. Then only if both
+        * carry a zone range on the leading sort column with
+        * max(a) < min(b), and `b` provably holds no null there: the
+        * column is non-nullable or b's `cnt:` cell counts no null.
+        * Missing or unparseable entries, and rename views (whose cells
+        * live under historical names), keep `b` out of a's partition.
+        */
+      private def mayFollow(a: File, b: File): Boolean =
+        reportedOrder.headOption.forall { c =>
+          def zone(f: File) = zonesAll.get(f.getAbsolutePath).flatMap(_.get(c))
+          def nullFree = !full(c).nullable ||
+            orderNullCells.get(b.getAbsolutePath).flatMap(_.get(c))
+              .exists { case (nn, total) => nn == total }
+          !renamed && nullFree && (for {
+            (_, aMax) <- zone(a)
+            (bMin, _) <- zone(b)
+            o <- AvroFilterEval.cmp(aMax, bMin)
+          } yield o < 0).getOrElse(false)
+        }
+      private lazy val renamed =
+        AvroFileSource.colmapFile(new File(path)).isFile
+      private lazy val orderNullCells: Map[String, Map[String, (Long, Long)]] =
+        AvroFileSource.nullCellsFromRaw(colZonesRaw, new File(path), full)
 
       override def planInputPartitions(): Array[InputPartition] =
         if (cdcFeed) {
@@ -5185,7 +5295,7 @@ class AvroScanBuilder(path: String, full: StructType,
                   prunedFiles().map(p => relOf(p._1)).toSet,
                   Some(AvroFileSource.deleteStateFingerprint(
                     new File(path))))))
-              prunedFiles().flatMap { case (f, _) =>
+              packed(prunedFiles().map { case (f, _) =>
                 // block-level skipping: only when the scan may row-skip
                 // freely — a row-level op's scan is group-exact (every
                 // row of a kept file must be served) and fully-pushed
@@ -5194,13 +5304,9 @@ class AvroScanBuilder(path: String, full: StructType,
                   if (rowLevelCapture.isEmpty && decided.isEmpty)
                     chunkRanges(f)
                   else None
-                chunked match {
-                  case Some(rs) => rs.map { case (s, e) =>
-                    AvroInputPartition(f.getAbsolutePath, s, e) }
-                  case None => split(f).map { case (p, s, e) =>
-                    AvroInputPartition(p, s, e) }
-                }
-              }.toArray[InputPartition]
+                (f, chunked.getOrElse(split(f).map { case (_, s, e) =>
+                  (s, e) }))
+              }).toArray
           }
           // COUNT(*) under positional deletes: dead rows still count in
           // block headers, so one extra partition carries the exact
@@ -5707,11 +5813,8 @@ case class AvroCountReaderFactory(required: StructType)
       dt: org.apache.spark.sql.types.DataType): Any =
     AvroFileSource.castPartitionValue(raw, dt) match {
       case Some(null) | None => null
-      case Some(s: String) =>
-        org.apache.spark.unsafe.types.UTF8String.fromString(s)
-      case Some(d: java.sql.Date) =>
-        d.toLocalDate.toEpochDay.toInt
-      case Some(v) => v
+      case Some(v) => org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToCatalystConverter(dt)(v)
     }
 
   private def oneRow(row: => InternalRow): PartitionReader[InternalRow] =
@@ -5756,8 +5859,8 @@ case class AvroCountReaderFactory(required: StructType)
         }
       case _ => ()
     }
-    val part = AvroReaderFactory.range(partition)
-    oneRow(InternalRow(countRange(new File(part.file), part.start, part.end)))
+    oneRow(InternalRow(AvroReaderFactory.splits(partition).map(part =>
+      countRange(new File(part.file), part.start, part.end)).sum))
   }
 }
 
@@ -6666,6 +6769,24 @@ case class AvroCdcReaderFactory(required: StructType, dataFull: StructType,
 case class AvroInputPartition(file: String, start: Long, end: Long)
   extends InputPartition
 
+/** Several [[AvroInputPartition]] splits read back to back in one task
+  * (small files packed under Spark's FilePartition sizing rule; see
+  * the scan's `packed`). The reader opens one split at a time, in
+  * order, so a packed partition yields exactly the rows of its splits
+  * read one after another.
+  */
+case class AvroPackedPartition(splits: Seq[AvroInputPartition])
+  extends InputPartition
+
+object AvroPackedPartition {
+  /** `parts` with every packed partition replaced by its splits. */
+  def flatten(parts: Seq[InputPartition]): Seq[InputPartition] =
+    parts.flatMap {
+      case k: AvroPackedPartition => k.splits
+      case p => Seq(p)
+    }
+}
+
 /** A sync-aligned byte range that also carries its directory-derived
   * partition-key tuple (Catalyst-internal values) for Spark's
   * storage-partitioned join machinery: BatchScanExec groups same-key
@@ -6679,14 +6800,48 @@ case class AvroKeyedPartition(file: String, start: Long, end: Long,
 object AvroReaderFactory {
   import org.apache.spark.sql.types.{ArrayType, DataType, MapType}
 
-  /** Both partition shapes read as a plain byte range (the key is
-    * planner metadata, not reader input).
+  /** The byte ranges a partition reads, in read order: a packed
+    * partition's splits, or the one range of a plain or keyed split
+    * (the key is planner metadata, not reader input).
     */
-  private[sources] def range(p: InputPartition): AvroInputPartition = p match {
-    case a: AvroInputPartition => a
-    case k: AvroKeyedPartition => AvroInputPartition(k.file, k.start, k.end)
-    case other => throw new IllegalArgumentException(s"not an avro partition: $other")
-  }
+  private[sources] def splits(p: InputPartition): Seq[AvroInputPartition] =
+    p match {
+      case a: AvroInputPartition => Seq(a)
+      case k: AvroKeyedPartition => Seq(AvroInputPartition(k.file, k.start, k.end))
+      case k: AvroPackedPartition => k.splits
+      case other => throw new IllegalArgumentException(s"not an avro partition: $other")
+    }
+
+  /** Read `parts` one after another through per-split readers, with at
+    * most one open at a time. `cap` bounds the rows of the whole chain
+    * (a pushed LIMIT): each split opens with the budget the earlier
+    * ones left, and the chain stops once it is spent. `rows` counts
+    * the rows of one element (1 for a row, the batch size for a
+    * columnar batch).
+    */
+  private[sources] def chain[T](parts: Seq[AvroInputPartition], cap: Int,
+      rows: T => Int)(open: (AvroInputPartition, Int) => PartitionReader[T])
+      : PartitionReader[T] =
+    if (parts.length == 1) open(parts.head, cap)
+    else new PartitionReader[T] {
+      private val rest = parts.iterator
+      private var cur: PartitionReader[T] = null
+      private var emitted = 0L
+      override def next(): Boolean = {
+        while (emitted < cap) {
+          if (cur == null) {
+            if (!rest.hasNext) return false
+            cur = open(rest.next(), (cap - emitted).toInt)
+          }
+          if (cur.next()) { emitted += rows(cur.get()); return true }
+          cur.close()
+          cur = null
+        }
+        false
+      }
+      override def get(): T = cur.get()
+      override def close(): Unit = if (cur != null) { cur.close(); cur = null }
+    }
 
   /** Resolve the READER record for `required` against a file's writer
     * record: writer fields keep their (recursively pruned) schema,
@@ -6890,10 +7045,17 @@ case class AvroReaderFactory(required: StructType, full: StructType,
   }
 
   override def createColumnarReader(partition: InputPartition)
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    AvroReaderFactory.chain(AvroReaderFactory.splits(partition),
+      limit.getOrElse(Int.MaxValue),
+      (b: org.apache.spark.sql.vectorized.ColumnarBatch) => b.numRows())(
+      readColumnar)
+
+  /** Columnar decode of one split, emitting at most `cap` rows. */
+  private def readColumnar(part: AvroInputPartition, cap: Int)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
     import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
-    val part = AvroReaderFactory.range(partition)
     val file = new File(part.file)
     // merge-on-read on the columnar path: widen pruned-away delete
     // columns into the decode schema (row-path rule) — the batch
@@ -6919,7 +7081,6 @@ case class AvroReaderFactory(required: StructType, full: StructType,
     val reader = new DataFileReader[AnyRef](file, vdr)
     if (part.start > 0) reader.sync(part.start)
     val bound = math.min(part.end, file.length())
-    val cap = limit.getOrElse(Int.MaxValue)
 
     // per-delete-check matcher over the freshly-decoded slot: external
     // equality on the vector's internal form (delete value types are
@@ -7059,10 +7220,9 @@ case class AvroReaderFactory(required: StructType, full: StructType,
       writerSchema, decodeSchema, file.toString, renamedAway, fileNameOf)
   }
 
-  private def openRange(partition: InputPartition, decodeSchema: StructType)
+  private def openRange(part: AvroInputPartition, decodeSchema: StructType)
       : (DataFileReader[GenericRecord], Long,
          org.apache.avro.generic.IndexedRecord => InternalRow) = {
-    val part = AvroReaderFactory.range(partition)
     val file = new File(part.file)
     val readerSchema = resolveFor(file, decodeSchema)
     val reader = new DataFileReader[GenericRecord](file,
@@ -7075,8 +7235,13 @@ case class AvroReaderFactory(required: StructType, full: StructType,
     (reader, bound, AvroInternalCodec.decoderFor(readerSchema, decodeSchema))
   }
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val part = AvroReaderFactory.range(partition)
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    AvroReaderFactory.chain(AvroReaderFactory.splits(partition),
+      limit.getOrElse(Int.MaxValue), (_: InternalRow) => 1)(readRows)
+
+  /** Row decode of one split, emitting at most `cap` rows. */
+  private def readRows(part: AvroInputPartition, cap: Int)
+      : PartitionReader[InternalRow] = {
     val file = new File(part.file)
     // versioned merge-on-read: restrict the sidecar to entries in force
     // for THIS file's birth version (absent from the journal ⇒ birth 0 ⇒
@@ -7106,7 +7271,7 @@ case class AvroReaderFactory(required: StructType, full: StructType,
     // view; promotions finish at decode) and returns the fused
     // GenericRecord → InternalRow decoder — one planned pass, no
     // external Row, each decode a fresh row so no defensive copy.
-    val (reader, bound, decode) = openRange(partition, decodeSchema)
+    val (reader, bound, decode) = openRange(part, decodeSchema)
     val keep = AvroFilterEval.build(decodeSchema, filters)
     val unfiltered = filters.isEmpty
     // (ordinal, deleted values) pairs against the DECODE schema; the
@@ -7150,7 +7315,6 @@ case class AvroReaderFactory(required: StructType, full: StructType,
         AvroFileSource.recordsBefore(file, part.start)
       else 0L
 
-    val cap = limit.getOrElse(Int.MaxValue)
     new PartitionReader[InternalRow] {
       private var row: InternalRow = _
       private var emitted = 0

@@ -140,15 +140,20 @@ object GraftAnnIndex {
   }
 
   /** Row count of a just-written tiny index table: served from the
-    * `_graft_rows` manifest the commit folded (zero Spark jobs, r21);
-    * falls back to a real count if any live file lacks coverage. */
-  private def manifestCount(s: SparkSession, dir: File): Long = {
+    * `_graft_rows` manifest the commit folded (zero Spark jobs, r21).
+    * The manifest counts physical rows, so a real count runs instead
+    * when any live file lacks coverage or a delete sidecar
+    * (`_graft_deletes`, `_graft_posdel`) hides some of them. */
+  private[sources] def manifestCount(s: SparkSession, dir: File): Long = {
     val base = dir.getAbsoluteFile.toPath
     val rows = AvroFileSource.readRowsRaw(AvroFileSource.rowsFile(dir))
     val live = AvroFileSource.listLive(dir).map { case (f, _) =>
       base.relativize(f.getAbsoluteFile.toPath).toString
     }
-    if (live.nonEmpty && live.forall(rows.contains)) live.map(rows).sum
+    val deletes = AvroFileSource.deleteFile(dir).isFile ||
+      AvroFileSource.posdelFile(dir).isFile
+    if (!deletes && live.nonEmpty && live.forall(rows.contains))
+      live.map(rows).sum
     else s.read.format("graft-avro").load(dir.getPath).count()
   }
 

@@ -295,4 +295,17 @@ class AnnSqlSpec extends AnyFunSuite with SparkSpec with Matchers {
       spark.sql("SELECT * FROM ivf_search('ann_spec.ns.idx')").collect()
     }.getMessage should include("ivf_search")
   }
+
+  test("manifestCount counts live rows once a delete sidecar exists") {
+    val t = graft.operators.Catalog.tempDir("ann_spec_count")
+    spark.range(0, 10).toDF("k").coalesce(1)
+      .write.format("graft-avro").mode("overwrite").save(t)
+    val d = new java.io.File(t)
+    GraftAnnIndex.manifestCount(spark, d) shouldBe 10L
+    AvroMaintenance.deleteWhere(spark, t, "k", Seq(3L))
+    GraftAnnIndex.manifestCount(spark, d) shouldBe 9L
+    AvroMaintenance.deleteAtPositions(t,
+      AvroFileSource.listAvro(d).head.getName, Seq(0L))
+    GraftAnnIndex.manifestCount(spark, d) shouldBe 8L
+  }
 }

@@ -73,7 +73,7 @@ class AvroAnalyzeSpec extends AnyFunSuite with SparkSpec with Matchers {
     AvroFileSource.bloomFile(new java.io.File(dir)).isFile shouldBe true
     val nFiles = AvroFileSource.listLive(new java.io.File(dir)).size
     val q = spark.read.format("graft-avro").load(dir).filter("k = 1234")
-    q.rdd.getNumPartitions should be < nFiles
+    ScanSplits.count(q) should be < nFiles
     q.collect().map(_.getLong(0)).toSeq shouldBe Seq(1234L)
   }
 

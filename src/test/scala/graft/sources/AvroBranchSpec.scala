@@ -123,11 +123,11 @@ class AvroBranchSpec extends AnyFunSuite with SparkSpec with Matchers {
     // 100 TB shape: the feed PLANS only the overlay's files — main's
     // bulk is never scanned and discarded (partition count = staged
     // files, strictly fewer than the union read's)
-    val unionParts = readBranch(dir, "feed").rdd.getNumPartitions
+    val unionParts = ScanSplits.count(readBranch(dir, "feed"))
     val overlayFiles = AvroFileSource.listAvro(
       AvroFileSource.branchDir(new java.io.File(dir), "feed")).size
-    feed.rdd.getNumPartitions shouldBe overlayFiles
-    feed.rdd.getNumPartitions should be < unionParts
+    ScanSplits.count(feed) shouldBe overlayFiles
+    ScanSplits.count(feed) should be < unionParts
     // cross-branch version range: main advances past the fork — the
     // overlay's base is stale, the feed refuses like publish would
     writeRange(dir, 50, 55, "append") // main moves on

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.io.File
 
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.{functions => F}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -21,14 +20,8 @@ class AvroClusterSpec extends AnyFunSuite with SparkSpec with Matchers {
 
   private def tmp(): String = graft.operators.Catalog.tempDir("graft_clu")
 
-  private def scanParts(df: org.apache.spark.sql.DataFrame): Int = {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val root = df.queryExecution.executedPlan
-    val under = root.collectFirst {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-    }.getOrElse(root)
-    under.collect { case b: BatchScanExec => b }.head.inputPartitions.size
-  }
+  private def scanParts(df: org.apache.spark.sql.DataFrame): Int =
+    ScanSplits.count(df)
 
   test("compactSortedTo keeps the sort claim, zones, and metadata MIN/MAX") {
     val in = tmp(); val out = tmp()

@@ -36,7 +36,7 @@ class AvroFileSourceSpec extends AnyFunSuite with SparkSpec with Matchers {
     spark.range(100).selectExpr("id", "cast(id as string) as s")
       .repartition(4).write.format("graft-avro").mode("append").save(dir)
     val back = spark.read.format("graft-avro").load(dir)
-    back.rdd.getNumPartitions shouldBe 4
+    ScanSplits.count(back) shouldBe 4
     back.count() shouldBe 100
   }
 
@@ -343,11 +343,11 @@ class AvroFileSourceSpec extends AnyFunSuite with SparkSpec with Matchers {
     spark.range(60000).selectExpr("id", "md5(cast(id as string)) as h")
       .coalesce(1).write.format("graft-avro").mode("append").save(dir)
     val whole = spark.read.format("graft-avro").load(dir)
-    whole.rdd.getNumPartitions shouldBe 1
+    ScanSplits.count(whole) shouldBe 1
 
     val split = spark.read.format("graft-avro")
       .option("maxSplitBytes", 64 * 1024).load(dir)
-    split.rdd.getNumPartitions should be > 4
+    ScanSplits.count(split) should be > 4
     // every row exactly once across the ranges
     split.count() shouldBe 60000
     split.agg(F.sum("id")).head().getLong(0) shouldBe
@@ -418,8 +418,8 @@ class AvroFileSourceSpec extends AnyFunSuite with SparkSpec with Matchers {
     // partition-directory pruning: the lang=en filter plans only the
     // files under lang=en (1 writer task x 1 value dir = 1 partition)
     val en = all.filter(F.col("lang") === "en")
-    val enParts = en.rdd.getNumPartitions
-    enParts should be < all.rdd.getNumPartitions
+    val enParts = ScanSplits.count(en)
+    enParts should be < ScanSplits.count(all)
     en.count() shouldBe spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .filter(F.col("lang") === "en").count()

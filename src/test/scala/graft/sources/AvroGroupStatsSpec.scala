@@ -242,4 +242,28 @@ class AvroGroupStatsSpec extends AnyFunSuite with SparkSpec with Matchers {
     (plan(df) should not).include("PushedAggregation")
     df.count() shouldBe 2
   }
+
+  test("grouped min/max of timestamp, NTZ and decimal columns") {
+    val dir = tmp()
+    spark.range(100)
+      .selectExpr("concat('p', cast(id % 2 as string)) as p",
+        "timestamp_seconds(1700000000 + id) as ts",
+        "make_timestamp_ntz(2024, 1, 1, 0, 0, cast(id % 60 as int)) as ntz",
+        "cast(id / 8.0 as decimal(10, 3)) as dec")
+      .write.format("graft-avro").option("partitionBy", "p")
+      .mode("overwrite").save(dir)
+    val t = spark.read.format("graft-avro").load(dir)
+    val aggs = Seq("ts", "ntz", "dec").flatMap(c =>
+      Seq(F.min(c).as(s"${c}_mn"), F.max(c).as(s"${c}_mx")))
+    val df = t.groupBy("p").agg(aggs.head, aggs.tail: _*)
+    plan(df) should include("PushedGroupBy: [p]")
+    val expected = spark.range(100)
+      .selectExpr("concat('p', cast(id % 2 as string)) as p",
+        "timestamp_seconds(1700000000 + id) as ts",
+        "make_timestamp_ntz(2024, 1, 1, 0, 0, cast(id % 60 as int)) as ntz",
+        "cast(id / 8.0 as decimal(10, 3)) as dec")
+      .groupBy("p").agg(aggs.head, aggs.tail: _*)
+    df.orderBy("p").collect().toSeq shouldBe
+      expected.orderBy("p").collect().toSeq
+  }
 }

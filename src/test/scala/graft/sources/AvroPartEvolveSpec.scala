@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.SparkSpec
 import org.apache.spark.sql.{functions => F}
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -20,14 +19,8 @@ class AvroPartEvolveSpec extends AnyFunSuite with SparkSpec with Matchers {
 
   private def tmp() = graft.operators.Catalog.tempDir("graft_pevolve")
 
-  private def scanPartitions(df: org.apache.spark.sql.DataFrame): Int = {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val root = df.queryExecution.executedPlan
-    val under = root.collectFirst {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-    }.getOrElse(root)
-    under.collect { case b: BatchScanExec => b }.head.inputPartitions.size
-  }
+  private def scanPartitions(df: org.apache.spark.sql.DataFrame): Int =
+    ScanSplits.count(df)
 
   /** 200 rows, two generations: gen 0 partitioned by pa, gen 1 by pb. */
   private def writeEvolved(dir: String): Unit = {

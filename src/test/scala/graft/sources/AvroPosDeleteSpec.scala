@@ -54,15 +54,8 @@ class AvroPosDeleteSpec extends AnyFunSuite with SparkSpec with Matchers {
       .selectExpr("id as k", "repeat('x', 200) as pad").coalesce(1)
       .write.format("graft-avro").option("codec", "null")
       .mode("overwrite").save(dir)
-    def parts(df: org.apache.spark.sql.DataFrame): Int = {
-      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-      import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-      val root = df.queryExecution.executedPlan
-      val under = root.collectFirst {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-      }.getOrElse(root)
-      under.collect { case b: BatchScanExec => b }.head.inputPartitions.size
-    }
+    def parts(df: org.apache.spark.sql.DataFrame): Int =
+      ScanSplits.count(df)
     def load() = spark.read.format("graft-avro")
       .option("maxSplitBytes", "262144").load(dir)
     parts(load()) should be > 1

@@ -121,7 +121,7 @@ class BlockIdxLaws extends AnyFunSuite with SparkSpec with Matchers {
       // false-positive keeps), an absent key scans zero (seeded, so a
       // false positive would be deterministic and visible here)
       def parts(df: org.apache.spark.sql.DataFrame): Int =
-        df.queryExecution.toRdd.getNumPartitions
+        ScanSplits.count(df)
       parts(t.filter(F.col("id") === data(n / 2)._2)) should
         be < bloomLines
       parts(t.filter(F.col("id") === -1L)) shouldBe 0
@@ -182,7 +182,7 @@ class BlockIdxLaws extends AnyFunSuite with SparkSpec with Matchers {
       // random-miss but 'tzz'+'zzz'... may collide — require < total,
       // not zero
       def parts(df: org.apache.spark.sql.DataFrame): Int =
-        df.queryExecution.toRdd.getNumPartitions
+        ScanSplits.count(df)
       parts(t.filter(F.col("s").contains(tokOf(data(n / 2))))) should
         be < trigLines
       parts(t.filter(F.col("s").contains("tzzzzabsent"))) should

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.io.File
 
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.{functions => F}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -24,14 +23,8 @@ class BlockIdxSpec extends AnyFunSuite with SparkSpec with Matchers {
 
   private def tmp(): String = graft.operators.Catalog.tempDir("graft_bix")
 
-  private def scanPartitions(df: org.apache.spark.sql.DataFrame): Int = {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val root = df.queryExecution.executedPlan
-    val under = root.collectFirst {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-    }.getOrElse(root)
-    under.collect { case b: BatchScanExec => b }.head.inputPartitions.size
-  }
+  private def scanPartitions(df: org.apache.spark.sql.DataFrame): Int =
+    ScanSplits.count(df)
 
   /** 40k sorted rows in ONE file → ~10 chunks of 4096 rows. */
   private def writeSorted(dir: String, n: Long = 40000L): Unit = {
@@ -201,7 +194,7 @@ class BlockIdxSpec extends AnyFunSuite with SparkSpec with Matchers {
           new Predicate("IN", (Expressions.column("id") +:
             runtimeIds.map(v => Expressions.literal(v))).toArray[
               org.apache.spark.sql.connector.expressions.Expression])))
-      scan.toBatch.planInputPartitions().length
+      ScanSplits.count(scan)
     }
     parts(Nil) shouldBe 1 // one file, no probes: whole-file split
     // three keys (rows 100, 20000, 39999) live in at most 3 chunks:

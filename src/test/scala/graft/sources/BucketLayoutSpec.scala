@@ -45,7 +45,7 @@ class BucketLayoutSpec extends AnyFunSuite with SparkSpec with Matchers {
         new Predicate("IN", (Expressions.column("k") +:
           runtimeIn.map(v => Expressions.literal(v))).toArray[
             org.apache.spark.sql.connector.expressions.Expression])))
-    scan.toBatch.planInputPartitions().length
+    ScanSplits.count(scan)
   }
 
   test("bucketed write: segments, sidecar, complete read-back") {
@@ -184,7 +184,7 @@ class BucketLayoutSpec extends AnyFunSuite with SparkSpec with Matchers {
         .option("versionAsOf", v).load(dir).schema
       val sb = new AvroScanBuilder(dir, schema, travelVersion = Some(v))
       if (filters.nonEmpty) sb.pushFilters(filters.toArray)
-      sb.build().toBatch.planInputPartitions().length
+      ScanSplits.count(sb.build())
     }
     // a point lookup at the OLD version prunes to the key's bucket
     val allV1 = partsAt(1L, Nil)
@@ -269,7 +269,7 @@ class BucketLayoutSpec extends AnyFunSuite with SparkSpec with Matchers {
       val schema = spark.read.format("graft-avro").load(dir).schema
       val sb = new AvroScanBuilder(dir, schema)
       sb.pushFilters(Array(f))
-      sb.build().toBatch.planInputPartitions().length
+      ScanSplits.count(sb.build())
     }
     val all = scanParts(dir)
     // scale-2 and scale-1 spellings of one value route to ONE bucket
@@ -308,7 +308,7 @@ class BucketLayoutSpec extends AnyFunSuite with SparkSpec with Matchers {
       val schema = spark.read.format("graft-avro").load(dir).schema
       val sb = new AvroScanBuilder(dir, schema)
       sb.pushFilters(Array(f))
-      sb.build().toBatch.planInputPartitions().length
+      ScanSplits.count(sb.build())
     }
     val all = scanParts(dir)
     val probe = java.sql.Timestamp.from(

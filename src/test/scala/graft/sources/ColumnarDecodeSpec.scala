@@ -60,7 +60,7 @@ class ColumnarDecodeSpec extends AnyFunSuite with SparkSpec with Matchers {
       .write.format("graft-avro").mode("append").save(dir)
     val back = spark.read.format("graft-avro")
       .option("maxSplitBytes", 256 * 1024).load(dir)
-    back.rdd.getNumPartitions should be > 1
+    ScanSplits.count(back) should be > 1
     assert(isColumnar(back))
     back.count() shouldBe 200000
     back.agg(F.sum("id")).head().getLong(0) shouldBe

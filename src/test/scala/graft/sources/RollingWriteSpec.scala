@@ -56,7 +56,7 @@ class RollingWriteSpec extends AnyFunSuite with SparkSpec with Matchers {
     AvroFileSource.sortedColumnOf(d) shouldBe Some("k")
     // disjoint per-file zones: a point predicate plans few partitions
     val q = spark.read.format("graft-avro").load(dir).filter("k = 250000")
-    q.rdd.getNumPartitions shouldBe 1
+    ScanSplits.count(q) shouldBe 1
     q.collect().map(_.getLong(0)).toSeq shouldBe Seq(250000L)
   }
 

@@ -19,15 +19,8 @@ import graft.SparkSpec
   */
 class StreamToTableSpec extends AnyFunSuite with SparkSpec with Matchers {
 
-  private def scanPartitions(df: org.apache.spark.sql.DataFrame): Int = {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    val root = df.queryExecution.executedPlan
-    val under = root.collectFirst {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-    }.getOrElse(root)
-    under.collect { case b: BatchScanExec => b }.head.inputPartitions.size
-  }
+  private def scanPartitions(df: org.apache.spark.sql.DataFrame): Int =
+    ScanSplits.count(df)
 
   test("streaming epochs route through days(ts) + bucket(id) hidden " +
       "partitioning and prune like batch writes") {

@@ -45,7 +45,7 @@ class XformLayoutSpec extends AnyFunSuite with SparkSpec with Matchers {
         new Predicate("IN", (Expressions.column("ts") +:
           runtimeTs.map(us => Expressions.literal(us))).toArray[
             org.apache.spark.sql.connector.expressions.Expression])))
-    scan.toBatch.planInputPartitions().length
+    ScanSplits.count(scan)
   }
 
   private def ts(epochDay: Long, sec: Long = 0L): java.sql.Timestamp =
@@ -235,9 +235,9 @@ class XformLayoutSpec extends AnyFunSuite with SparkSpec with Matchers {
     val schema = spark.read.format("graft-avro").load(dir).schema
     val sb = new AvroScanBuilder(dir, schema, travelVersion = Some(1L))
     sb.pushFilters(Array[Filter](EqualTo("ts", ts(2, 120))))
-    val keptV1 = sb.build().toBatch.planInputPartitions().length
+    val keptV1 = ScanSplits.count(sb.build())
     val sbAll = new AvroScanBuilder(dir, schema, travelVersion = Some(1L))
-    keptV1 should be < sbAll.build().toBatch.planInputPartitions().length
+    keptV1 should be < ScanSplits.count(sbAll.build())
     // truncate overwrite RE-partitions under a new spec + younger stamp
     spark.range(0, 100).toDF("id")
       .withColumn("ts", F.expr("timestamp_micros(86400000000L * (id % 3))"))
@@ -249,9 +249,9 @@ class XformLayoutSpec extends AnyFunSuite with SparkSpec with Matchers {
     // a travel read BELOW the new stamp stands down (kept = all of v2)
     val sbOld = new AvroScanBuilder(dir, schema, travelVersion = Some(2L))
     sbOld.pushFilters(Array[Filter](EqualTo("ts", ts(2, 120))))
-    val allV2 = new AvroScanBuilder(dir, schema, travelVersion = Some(2L))
-      .build().toBatch.planInputPartitions().length
-    sbOld.build().toBatch.planInputPartitions().length shouldBe allV2
+    val allV2 = ScanSplits.count(
+      new AvroScanBuilder(dir, schema, travelVersion = Some(2L)).build())
+    ScanSplits.count(sbOld.build()) shouldBe allV2
     // and the travel read still answers exactly
     spark.read.format("graft-avro").option("versionAsOf", 2)
       .load(dir).count() shouldBe 700

@@ -22,14 +22,8 @@ class ZoneMapSpec extends AnyFunSuite with SparkSpec with Matchers {
 
   private def tmp(): String = graft.operators.Catalog.tempDir("graft_zones")
 
-  private def scanPartitions(df: org.apache.spark.sql.DataFrame): Int = {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val root = df.queryExecution.executedPlan
-    val under = root.collectFirst {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-    }.getOrElse(root)
-    under.collect { case b: BatchScanExec => b }.head.inputPartitions.size
-  }
+  private def scanPartitions(df: org.apache.spark.sql.DataFrame): Int =
+    ScanSplits.count(df)
 
   /** 10k rows over k = 0..9999, range-partitioned into 8 sorted files. */
   private def writeSorted(dir: String): Unit = {
@@ -584,18 +578,18 @@ class ZoneMapSpec extends AnyFunSuite with SparkSpec with Matchers {
     // k is declared runtime-filterable purely via its zone coverage
     rt.filterAttributes().map(_.fieldNames().mkString(".")) should
       contain("k")
-    scan.toBatch.planInputPartitions().length shouldBe 4
+    ScanSplits.count(scan) shouldBe 4
     // join-key IN-set {5, 142}: files 2 and 3 can't match — skipped
     rt.filter(Array(new Predicate("IN", Array[
         org.apache.spark.sql.connector.expressions.Expression](
       Expressions.column("k"),
       Expressions.literal(5L), Expressions.literal(142L)))))
-    scan.toBatch.planInputPartitions().length shouldBe 2
+    ScanSplits.count(scan) shouldBe 2
     // values outside every zone prune ALL files
     rt.filter(Array(new Predicate("IN", Array[
         org.apache.spark.sql.connector.expressions.Expression](
       Expressions.column("k"), Expressions.literal(9999L)))))
-    scan.toBatch.planInputPartitions().length shouldBe 0
+    ScanSplits.count(scan) shouldBe 0
   }
 
   test("runtime zone pruning keeps broadcast-join answers exact") {
@@ -616,5 +610,30 @@ class ZoneMapSpec extends AnyFunSuite with SparkSpec with Matchers {
       include("RuntimeFilters: [")
     joined.select("k").collect().map(_.getLong(0)).sorted.toSeq shouldBe
       Seq(7L, 42L, 205L, 399L)
+  }
+
+  test("TIMESTAMP_NTZ range predicates prune files through column zones") {
+    val dir = tmp()
+    // file i holds day 2024-01-(1 + i)
+    (0 until 4).foreach { i =>
+      spark.range(i * 100L, i * 100L + 100L).toDF("k")
+        .withColumn("ts", F.expr("make_timestamp_ntz(2024, 1, " +
+          "1 + cast(k div 100 as int), 0, 0, cast(k % 60 as int))"))
+        .coalesce(1).write.format("graft-avro").mode("append").save(dir)
+    }
+    val t = spark.read.format("graft-avro").load(dir)
+    t.schema("ts").dataType shouldBe
+      org.apache.spark.sql.types.TimestampNTZType
+    scanPartitions(t) shouldBe 4
+    val late = t.filter(
+      F.col("ts") >= F.lit(java.time.LocalDateTime.of(2024, 1, 3, 0, 0)))
+    scanPartitions(late) shouldBe 2
+    late.count() shouldBe 200
+    val day2 = t.filter(F.col("ts").between(
+      F.lit(java.time.LocalDateTime.of(2024, 1, 2, 0, 0, 30)),
+      F.lit(java.time.LocalDateTime.of(2024, 1, 2, 0, 0, 40))))
+    scanPartitions(day2) shouldBe 1
+    // k 100..199 carry seconds 40..59, 0..59, 0..19: 1 + 11 in [30, 40]
+    day2.count() shouldBe 12
   }
 }
