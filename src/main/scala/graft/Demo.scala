@@ -9,15 +9,7 @@ import org.apache.spark.sql.{functions => F}
 object Demo {
   def main(args: Array[String]): Unit = {
     import graft.sql.GraftSql.implicits._
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions",
-        classOf[graft.functions.GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("4", "ERROR")
 
     val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val customer = spark.read.parquet(s"$sf/customer.parquet")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `explain(formatted)` for selected gate queries so plan
   * regressions (fact-side broadcasts, unpruned scans, lost pushdown) are
   * visible. Usage: `runMain graft.PlanAudit [queryName ...]`.
@@ -16,15 +14,7 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions",
-        classOf[graft.functions.GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("4", "ERROR")
     val mode = args.headOption match {
       case Some("--fingerprint") => "fingerprint"
       case Some("--fpcheck")     => "fpcheck"

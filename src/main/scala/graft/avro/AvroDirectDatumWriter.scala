@@ -2,7 +2,6 @@ package graft.avro
 
 import org.apache.avro.Schema
 import org.apache.avro.Schema.Type
-import org.apache.avro.generic.{GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.{DatumWriter, Encoder}
 import org.apache.avro.util.Utf8
 import org.apache.spark.sql.catalyst.InternalRow
@@ -10,14 +9,12 @@ import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.types._
 
 import scala.jdk.CollectionConverters._
-import scala.util.control.NonFatal
 
-/** Write-side mirror of the vectorized decode tiers: a
-  * `DatumWriter[InternalRow]` that encodes Catalyst internal rows
-  * STRAIGHT into Avro's `Encoder`, skipping the per-row
-  * InternalRow → external value → GenericRecord materialization the
-  * [[AvroInternalCodec.encoderFor]] path pays (that conversion was the
-  * single hottest allocation site of every graft-avro write).
+/** The graft-avro `DatumWriter[InternalRow]`: encodes Catalyst internal
+  * rows STRAIGHT into Avro's `Encoder`, with no per-row
+  * InternalRow → external value → GenericRecord materialization (the
+  * [[AvroInternalCodec.encoderFor]] conversion, which was the single
+  * hottest allocation site of every graft-avro write).
   *
   * Planning happens once per (struct, writer schema): each field
   * resolves to a closure over [[SpecializedGetters]] so rows and array
@@ -26,47 +23,28 @@ import scala.util.control.NonFatal
   * writer call sites), so the supported shapes are closed: primitives,
   * string/enum, bytes/fixed, decimal-as-bytes, date, (local)
   * timestamp millis/micros, nested records, arrays, string-keyed maps,
-  * nullable `[null, T]` unions and tagged multi-branch unions. Anything
-  * unplannable falls back to the GenericRecord path for the whole file
-  * (same bytes, just slower), so this is purely an encode fast path —
-  * value semantics are pinned to [[AvroInternalCodec]] by
-  * DirectWriteSpec's byte-for-byte file comparison.
+  * nullable `[null, T]` unions and tagged multi-branch unions. A pair
+  * outside that set throws `IllegalArgumentException` naming the field
+  * when the writer is created, never at the first row. Value semantics
+  * are pinned to [[AvroInternalCodec.encoderFor]] +
+  * `GenericDatumWriter` by DirectWriteSpec's per-datum byte comparison.
   *
-  * Maps: the generic path iterated a freshly-built `java.util.HashMap`,
-  * so map ENTRY ORDER in the container bytes was hash order; here it is
-  * the Catalyst `MapData` order. Avro maps are unordered — readers (and
-  * every oracle) see identical contents.
+  * Maps: entries are written in Catalyst `MapData` order (the
+  * GenericRecord reference iterates a `java.util.HashMap`, so its entry
+  * order is hash order). Avro maps are unordered — readers (and every
+  * oracle) see identical contents.
   */
 object AvroDirectDatumWriter {
 
-  /** Escape hatch + A/B seam (see WriteAb): `-Dgraft.avro.directWrite=false`
-    * forces the GenericRecord fallback. Read once per writer creation.
-    */
-  private def enabled: Boolean =
-    sys.props.getOrElse("graft.avro.directWrite", "true").toBoolean
-
   def apply(struct: StructType, avro: Schema): DatumWriter[InternalRow] =
-    if (!enabled) new FallbackRowWriter(struct, avro)
-    else
-      try new DirectRowWriter(struct, avro)
-      catch { case NonFatal(_) => new FallbackRowWriter(struct, avro) }
-
-  /** GenericRecord tier: identical to the historical write path. */
-  private final class FallbackRowWriter(struct: StructType, avro: Schema)
-      extends DatumWriter[InternalRow] {
-    private val toAvro = AvroInternalCodec.encoderFor(struct, avro)
-    private val gen = new GenericDatumWriter[GenericRecord](avro)
-    override def setSchema(s: Schema): Unit = gen.setSchema(s)
-    override def write(r: InternalRow, out: Encoder): Unit =
-      gen.write(toAvro(r), out)
-  }
+    new DirectRowWriter(struct, avro)
 
   /** (getters, ordinal, encoder) → emit the value at `ordinal`. */
   private type VW = (SpecializedGetters, Int, Encoder) => Unit
 
   private final class DirectRowWriter(struct: StructType, avro: Schema)
       extends DatumWriter[InternalRow] {
-    private val writers: Array[VW] = recordWriters(struct, avro)
+    private val writers: Array[VW] = recordWriters(struct, avro, "")
     override def setSchema(s: Schema): Unit = ()
     override def write(r: InternalRow, out: Encoder): Unit = {
       var i = 0
@@ -79,26 +57,28 @@ object AvroDirectDatumWriter {
     * toAvro-derived schemas, but the closure bakes the struct ordinal
     * in so a permuted foreign schema would still encode correctly.
     */
-  private def recordWriters(struct: StructType, avro0: Schema): Array[VW] = {
+  private def recordWriters(struct: StructType, avro0: Schema, path: String)
+      : Array[VW] = {
     val rec =
       if (avro0.getType == Type.UNION) AvroSchemaConverter.fromUnion(avro0)._1
       else avro0
-    require(rec.getType == Type.RECORD, s"not a record: $rec")
+    if (rec.getType != Type.RECORD) unplannable(path, s"$rec is not a record")
     rec.getFields.asScala.toArray.map { af =>
-      val si = struct.fieldIndex(af.name) // throws on a missing field
-      val vw = valueWriter(struct.fields(si).dataType, af.schema())
+      val name = if (path.isEmpty) af.name else s"$path.${af.name}"
+      val si = column(struct, af.name, name)
+      val vw = valueWriter(struct.fields(si).dataType, af.schema(), name)
       // rebase the planned ordinal: record writers receive the record's
       // own getters, so the closure must read the STRUCT ordinal
       ((r: SpecializedGetters, _: Int, out: Encoder) => vw(r, si, out)): VW
     }
   }
 
-  private def valueWriter(dt: DataType, schema0: Schema): VW = {
-    if (schema0.getType == Type.UNION) return unionWriter(dt, schema0)
+  private def valueWriter(dt: DataType, schema0: Schema, path: String): VW = {
+    if (schema0.getType == Type.UNION) return unionWriter(dt, schema0, path)
     (dt, schema0.getType) match {
       // primitive getters read a null slot as 0/false: check first, so
-      // a null in a non-nullable field fails the write like the
-      // GenericRecord tier does instead of landing as a silent zero
+      // a null in a non-nullable field fails the write like
+      // GenericDatumWriter does instead of landing as a silent zero
       case (BooleanType, Type.BOOLEAN) =>
         (r, i, out) =>
           if (r.isNullAt(i)) nullIn(schema0) else out.writeBoolean(r.getBoolean(i))
@@ -148,7 +128,7 @@ object AvroDirectDatumWriter {
       case (NullType, Type.NULL) =>
         (_, _, out) => out.writeNull()
       case (st: StructType, Type.RECORD) =>
-        val fws = recordWriters(st, schema0)
+        val fws = recordWriters(st, schema0, path)
         val n = st.length
         (r, i, out) => {
           val row = r.getStruct(i, n)
@@ -156,7 +136,7 @@ object AvroDirectDatumWriter {
           while (f < fws.length) { fws(f)(row, f, out); f += 1 }
         }
       case (ArrayType(et, _), Type.ARRAY) =>
-        val ew = valueWriter(et, schema0.getElementType)
+        val ew = valueWriter(et, schema0.getElementType, s"$path[]")
         (r, i, out) => {
           val a = r.getArray(i)
           val n = a.numElements()
@@ -167,7 +147,7 @@ object AvroDirectDatumWriter {
           out.writeArrayEnd()
         }
       case (MapType(StringType, vt, _), Type.MAP) =>
-        val vw = valueWriter(vt, schema0.getValueType)
+        val vw = valueWriter(vt, schema0.getValueType, s"$path{}")
         (r, i, out) => {
           val m = r.getMap(i)
           val ks = m.keyArray()
@@ -184,10 +164,20 @@ object AvroDirectDatumWriter {
           }
           out.writeMapEnd()
         }
-      case other =>
-        throw new IllegalArgumentException(s"unplannable: $other")
+      case _ =>
+        unplannable(path, s"Spark ${dt.simpleString} as Avro $schema0")
     }
   }
+
+  private def column(st: StructType, name: String, path: String): Int = {
+    val i = st.fieldNames.indexOf(name)
+    if (i < 0) unplannable(path, s"no '$name' column in ${st.simpleString}")
+    i
+  }
+
+  private def unplannable(path: String, why: String): Nothing =
+    throw new IllegalArgumentException(
+      s"cannot write field '${if (path.isEmpty) "<root>" else path}': $why")
 
   private def nullIn(schema: Schema): Nothing =
     throw new NullPointerException(s"null value for non-nullable $schema")
@@ -198,24 +188,26 @@ object AvroDirectDatumWriter {
     * [[AvroInternalCodec.outUnionConverter]] + GenericData.resolveUnion
     * (a null ACTIVE branch value resolves to the null branch).
     */
-  private def unionWriter(dt: DataType, union: Schema): VW = {
+  private def unionWriter(dt: DataType, union: Schema, path: String): VW = {
     val types = union.getTypes.asScala.toArray
     val nullIdx = types.indexWhere(_.getType == Type.NULL)
     val nonNull = types.zipWithIndex.filter(_._1.getType != Type.NULL)
-    if (nonNull.length == 1) {
+    if (nonNull.length == 1 && nullIdx >= 0) {
       val (branch, valIdx) = nonNull.head
-      val inner = valueWriter(dt, branch)
-      require(nullIdx >= 0, s"single-branch union without null: $union")
+      val inner = valueWriter(dt, branch, path)
       (r, i, out) =>
         if (r.isNullAt(i)) { out.writeIndex(nullIdx); out.writeNull() }
         else { out.writeIndex(valIdx); inner(r, i, out) }
     } else {
-      val st = dt.asInstanceOf[StructType]
-      val tagIdx = st.fieldIndex(AvroSchemaConverter.UnionTagField)
+      val st = dt match {
+        case st: StructType if nonNull.length >= 2 => st
+        case _ => unplannable(path, s"Spark ${dt.simpleString} as Avro $union")
+      }
+      val tagIdx = column(st, AvroSchemaConverter.UnionTagField, path)
       val byTag: Map[String, (Int, Int, VW)] = nonNull.map { case (b, j) =>
         val name = AvroSchemaConverter.branchName(b)
-        val fi = st.fieldIndex(name)
-        name -> ((j, fi, valueWriter(st.fields(fi).dataType, b)))
+        val fi = column(st, name, path)
+        name -> ((j, fi, valueWriter(st.fields(fi).dataType, b, s"$path.$name")))
       }.toMap
       val stLen = st.length
       (r, i, out) => {

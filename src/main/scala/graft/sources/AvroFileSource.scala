@@ -8387,6 +8387,23 @@ private[sources] object AvroWriters {
       case _ => None
     }
 
+  /** A `sortedBy` claim planned against the write schema: (columns,
+    * struct ordinals, types, internal comparators). AvroWriteBuilder
+    * admits only sort types [[internalCmp]] orders, so a missing
+    * comparator is a bug and throws rather than verifying nothing.
+    */
+  private def sortKey(schema: StructType, sortedBy: Option[String])
+      : (Seq[String], Seq[Int], Array[DataType], Array[(Any, Any) => Int]) = {
+    val cols = sortedBy.toSeq.flatMap(AvroFileSource.sortCols)
+    val idx = cols.map(schema.fieldIndex)
+    val dts = idx.map(i => schema.fields(i).dataType).toArray
+    val cmps = cols.zip(dts).map { case (c, dt) =>
+      internalCmp(dt).getOrElse(throw new IllegalArgumentException(
+        s"sortedBy column '$c': no comparator for ${dt.simpleString}"))
+    }.toArray
+    (cols, idx, dts, cmps)
+  }
+
   /** Detach an internal value that must SURVIVE the current row: the
     * incoming InternalRow may be a reused Unsafe buffer, so a retained
     * UTF8String view must be copied. Everything else this path stores
@@ -8847,11 +8864,7 @@ private[sources] object AvroWriters {
     val idx = partCols.map(schema.fieldIndex)
     val bidx = buckets.map { case (c, _) => schema.fieldIndex(c) }
     val xidx = xforms.map(x => schema.fieldIndex(x.col))
-    val sortColsList = sortedBy.toSeq.flatMap(AvroFileSource.sortCols)
-    val sortIdx = sortColsList.map(schema.fieldIndex)
-    val sortDts = sortIdx.map(i => schema.fields(i).dataType).toArray
-    val sortCmps: Array[(Any, Any) => Int] =
-      sortDts.map(dt => internalCmp(dt).getOrElse((_: Any, _: Any) => 0))
+    val (sortColsList, sortIdx, sortDts, sortCmps) = sortKey(schema, sortedBy)
     val avroSchema = AvroSchemaConverter.toAvro(schema, "topLevelRecord", None, None)
     // rolling in both modes — see AvroWriters.open for the streaming
     // exactly-once argument (deterministic (epoch, partition, seq) names)
@@ -8869,8 +8882,8 @@ private[sources] object AvroWriters {
         new File(dir, if (staged) name + ".staging" else name)
       }
       val writer: DataFileWriter[InternalRow] = {
-        // direct InternalRow→BinaryEncoder encode (GenericRecord tier
-        // only as the unplannable-shape fallback) — see AvroDirectDatumWriter
+        // InternalRow → BinaryEncoder, no GenericRecord per row — see
+        // AvroDirectDatumWriter
         val w = new DataFileWriter[InternalRow](
           AvroDirectDatumWriter(schema, avroSchema))
         w.setCodec(codecFor(codec))
@@ -9103,11 +9116,7 @@ private[sources] object AvroWriters {
       chunkBloomFor: Seq[String] = Nil,
       chunkTrigramFor: Seq[String] = Nil): DataWriter[InternalRow] = {
     val avroSchema = AvroSchemaConverter.toAvro(schema, "topLevelRecord", None, None)
-    val sortColsList = sortedBy.toSeq.flatMap(AvroFileSource.sortCols)
-    val sortIdx = sortColsList.map(schema.fieldIndex)
-    val sortDts = sortIdx.map(i => schema.fields(i).dataType).toArray
-    val sortCmps: Array[(Any, Any) => Int] =
-      sortDts.map(dt => internalCmp(dt).getOrElse((_: Any, _: Any) => 0))
+    val (sortColsList, sortIdx, sortDts, sortCmps) = sortKey(schema, sortedBy)
     // rolling applies to BOTH write modes. Staged batch files publish
     // at job commit as usual. Streaming (unstaged) keeps exactly-once:
     // the rolled name is a pure function of (epoch, partition, seq),
@@ -9129,8 +9138,8 @@ private[sources] object AvroWriters {
         if (staged) new File(path, finalFile.getName + ".staging")
         else finalFile
       val writer: DataFileWriter[InternalRow] = {
-        // direct InternalRow→BinaryEncoder encode (GenericRecord tier
-        // only as the unplannable-shape fallback) — see AvroDirectDatumWriter
+        // InternalRow → BinaryEncoder, no GenericRecord per row — see
+        // AvroDirectDatumWriter
         val w = new DataFileWriter[InternalRow](
           AvroDirectDatumWriter(schema, avroSchema))
         w.setCodec(codecFor(codec))
